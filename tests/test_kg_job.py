@@ -260,6 +260,21 @@ def test_kgjob_detect_dictionary(spark, tx, tmp_path):
     assert not any(r.origin == gone or r.target == gone
                    for r in out3["graph"].collect())
 
+    # the detect mode is part of the lineage too: the same gazetteer
+    # under lexicon detect must recompute the mentions stage, not resume
+    # the gazetteer checkpoint, and equal a fresh lexicon run
+    big = extract.synthetic_big_dictionary(spark)
+    wd_big = str(tmp_path / "big")
+    KGJob(spark, wd_big, dictionary=big, detect="dictionary").run(
+        tx, input_fingerprint="v1")
+    job4 = KGJob(spark, wd_big, dictionary=big)
+    out4 = job4.run(tx, input_fingerprint="v1")
+    assert not job4.metrics["mentions"].get("resumed")
+    fresh = KGJob(spark, str(tmp_path / "big_lex"), dictionary=big).run(
+        tx, input_fingerprint="v1")
+    assert _triples(out4["graph"]) == _triples(fresh["graph"])
+    assert out4["graph"].count() == fresh["graph"].count()
+
     with pytest.raises(ValueError):
         KGJob(spark, wd, detect="dictionary")
 
@@ -303,6 +318,45 @@ def test_kgjob_lexicon_with_custom_linking_dictionary(spark, tx, tmp_path):
     assert spark_rows and all(
         not r.linked and "entity/unlinked/" in r.entity_iri
         for r in spark_rows)
+
+
+_RUNNER_CONFIGS = {
+    "default": lambda spark: {},
+    "lexicon_custom_dictionary": lambda spark: {
+        "dictionary": linking.canonical_dictionary(spark).withColumn(
+            "entity_iri", F.concat(F.lit("custom:"), F.col("canonical")))},
+    "gazetteer": lambda spark: {
+        "dictionary": extract.synthetic_big_dictionary(spark),
+        "detect": "dictionary"},
+    "relations": lambda spark: {"relations": ("reads", "uses")},
+}
+
+
+@pytest.mark.parametrize("config", sorted(_RUNNER_CONFIGS))
+def test_build_graph_and_kgjob_agree(spark, tx, tmp_path, config):
+    """The two runners of the one stage graph — build_graph's in-memory
+    persist and KGJob's per-stage checkpoints — emit the same
+    (origin, rel, target) multiset under every config."""
+    from versa_spark.kg.graph import build_graph
+    verbs = spark.createDataFrame(
+        [("conv-rel", 0, "user", "spark reads the table here", None, None),
+         ("conv-rel", 1, "user", "the query uses a hash today", None, None)],
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, ts timestamp")
+    src = tx.unionByName(verbs)
+    kw = _RUNNER_CONFIGS[config](spark)
+    cols = ["origin", "rel", "target"]
+    parts = build_graph(spark, ordered_turns(src), **kw)
+    a = parts["graph"].select(*cols)
+    b = KGJob(spark, str(tmp_path / config), **kw).run(
+        src, input_fingerprint="v1")["graph"].select(*cols)
+    assert a.count() > 1000
+    if config == "relations":
+        assert a.filter(F.col("rel").contains("v/rel/")).count() == 2
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0
+    parts["turns"].unpersist()
+    parts["linked"].unpersist()
 
 
 def test_salted_equals_unsalted_canonicalization(spark):
@@ -537,13 +591,6 @@ def test_write_distribution_bounds_file_count(spark, tmp_path):
     assert 0 < n_mention_files <= 8, n_mention_files
     assert 0 < n_order_files <= 8, n_order_files
     assert out["graph"].count() > 1000
-    # distribution must not change any stage's contents
-    wd2 = str(tmp_path / "kgd_none")
-    out2 = KGJob(spark, wd2, n_buckets=8,
-                 write_distribution="none").run(tx, input_fingerprint="v1")
-    a = {(r.origin, r.rel, r.target) for r in out["graph"].collect()}
-    b = {(r.origin, r.rel, r.target) for r in out2["graph"].collect()}
-    assert a == b
 
 
 def test_link_entities_scored_partitioning_invariant(spark):
@@ -921,8 +968,8 @@ def test_compact_with_relations_then_append(spark, tmp_path):
 
 
 def test_append_and_compact_refuse_config_mismatch(spark, tmp_path):
-    """A base built under one dictionary/relations config must not be
-    grown or compacted under another: run() recomputes on config change
+    """A base built under one dictionary/relations/detect config must not
+    be grown or compacted under another: run() recomputes on config change
     (fingerprint folding), so the incremental paths refuse instead of
     silently mixing configurations; compact_to also refuses a
     half-committed batch (its retry path would be gone)."""
@@ -942,6 +989,18 @@ def test_append_and_compact_refuse_config_mismatch(spark, tmp_path):
                   dictionary=linking.canonical_dictionary(spark))
     with pytest.raises(ValueError, match="dict"):
         job_d.append_batch(tx.filter(h == 1), "b1", input_fingerprint="x")
+    # detect mode: a gazetteer-detect job must not grow or compact a
+    # lexicon-detect base built with the same dictionary
+    d = linking.canonical_dictionary(spark)
+    wd_d = str(tmp_path / "cfg_dict")
+    KGJob(spark, wd_d, n_buckets=2, dictionary=d).run(
+        tx.filter(h == 0), input_fingerprint="base")
+    job_g = KGJob(spark, wd_d, n_buckets=2, dictionary=d,
+                  detect="dictionary")
+    with pytest.raises(ValueError, match="detect"):
+        job_g.append_batch(tx.filter(h == 1), "b1", input_fingerprint="x")
+    with pytest.raises(ValueError, match="detect"):
+        job_g.compact_to(str(tmp_path / "cfg_dict2"))
 
     job = KGJob(spark, wd, n_buckets=2)
     job.append_batch(tx.filter(h == 1), "b1", input_fingerprint="b1")

@@ -65,44 +65,36 @@ def kg_main(argv) -> int:
     from versa_spark.kg.job import KGJob
     rels = (tuple(v for v in args.relations.split(",") if v)
             if args.relations else None)
-    if args.compact_to:
-        dictionary = (spark.read.parquet(args.dictionary)
-                      if args.dictionary else None)
-        job = KGJob(spark, args.workdir, n_buckets=args.buckets,
-                    salt=args.salt, dictionary=dictionary,
-                    detect=args.detect, relations=rels)
-        cj = job.compact_to(args.compact_to,
-                            input_fingerprint=args.fingerprint)
-        print(json.dumps({"metrics": cj.metrics,
-                          "graph_rows": cj.table("graph").count(),
-                          "edge_rows": cj.table("edges").count()},
-                         separators=(",", ":"), default=str))
-        spark.stop()
-        return 0
-    if args.synthetic_turns:
-        from versa_spark.kg.transcripts import synthetic_transcripts
-        tx = synthetic_transcripts(
-            spark, n_convs=max(1, args.synthetic_turns // 25),
-            turns_per_conv=25)
-    elif args.input:
-        tx = spark.read.parquet(args.input)
-    else:
-        raise SystemExit("one of --input / --synthetic-turns is required")
-
     dictionary = (spark.read.parquet(args.dictionary)
                   if args.dictionary else None)
     job = KGJob(spark, args.workdir, n_buckets=args.buckets, salt=args.salt,
                 dictionary=dictionary, detect=args.detect, relations=rels)
-    if args.append_batch:
-        out = job.append_batch(tx, args.append_batch,
-                               input_fingerprint=args.fingerprint,
-                               on_existing=args.on_existing)
+    if args.compact_to:
+        job = job.compact_to(args.compact_to,
+                             input_fingerprint=args.fingerprint)
         graph_rows = job.table("graph").count()
         edge_rows = job.table("edges").count()
     else:
-        out = job.run(tx, input_fingerprint=args.fingerprint)
-        graph_rows = out["graph"].count()
-        edge_rows = out["edges"].count()
+        if args.synthetic_turns:
+            from versa_spark.kg.transcripts import synthetic_transcripts
+            tx = synthetic_transcripts(
+                spark, n_convs=max(1, args.synthetic_turns // 25),
+                turns_per_conv=25)
+        elif args.input:
+            tx = spark.read.parquet(args.input)
+        else:
+            raise SystemExit("one of --input / --synthetic-turns is "
+                             "required")
+        if args.append_batch:
+            job.append_batch(tx, args.append_batch,
+                             input_fingerprint=args.fingerprint,
+                             on_existing=args.on_existing)
+            graph_rows = job.table("graph").count()
+            edge_rows = job.table("edges").count()
+        else:
+            out = job.run(tx, input_fingerprint=args.fingerprint)
+            graph_rows = out["graph"].count()
+            edge_rows = out["edges"].count()
     print(json.dumps({"metrics": job.metrics,
                       "graph_rows": graph_rows,
                       "edge_rows": edge_rows},

@@ -1,12 +1,17 @@
 """The end-to-end transcript → knowledge-graph job, checkpointed & resumable.
 
-Stage graph (north rule):
+Stage graph (north rule) — the shared one of kg.graph (``link_mentions``
+then ``link_families``), run with a checkpointing ``stage`` callback:
 
     transcripts ─┬─ turn_order (slim window rank — text never rides it)
-                 └─ turns (projection) ─┬─ conversation_links ──┐
-                                        └─ turn_mentions ─ link_entities ─┬─ mention_links ──┤──▶ graph table
-                                                                          ├─ entity_links ───┘     + adjacency edges
-                                                                          └─ entity_mention_counts (metrics table)
+                 └─ turns (projection) ─┬─ conversation_links ─────────────────────────┐
+                                        ├─ mentions ─ linked ─┬─ mention_links ────────┤
+                                        │                     ├─ entity_links ─────────┼──▶ graph ─▶ edges
+                                        │                     └─ entity_stats          │
+                                        └─ relations (opt-in verb triples) ────────────┘
+
+``detect='dictionary'``: ``mentions`` is the fused gazetteer detect+link
+join, and ``linked`` is a view of the mentions checkpoint, not a stage.
 
 Checkpoint/lineage: every stage writes Parquet under <workdir>/<stage>/ and
 appends a manifest row (stage, status, rows, input_fingerprint, wall_s, ts).
@@ -38,55 +43,47 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
-from versa_spark.kg import canonicalize, extract, linking, transcripts as T
+from versa_spark.kg import canonicalize, transcripts as T
+from versa_spark.kg.graph import check_detect, link_families, link_mentions
 
 MANIFEST = "_manifest.jsonl"
 
 
 class KGJob:
-    """``write_distribution``:
-
-    * ``'auto'`` (default) — stages WITHOUT the fat ``text`` column
-      repartition by ``pt`` before the partitioned write (the
-      Iceberg ``write.distribution-mode=hash`` equivalent): without it
-      every mapper writes into every bucket directory and a stage emits
-      M×B files — at 10^12 turns that is 10^9+ tiny files, a metadata
-      catastrophe.  The ``text``-carrying turns stage is exempt so the
-      fat column still never rides an exchange: with the north rule's
-      input (an Iceberg table bucketed by conv_id) each input split
-      already holds exactly one bucket, so its mapper-aligned write
-      produces one file per bucket naturally — alignment, not shuffle,
-      is the production answer for the fat stage.
-    * ``'none'`` — mapper-aligned writes everywhere (the pre-round-3
-      behavior; fine at fixture scale)."""
+    """Write distribution: stages WITHOUT the fat ``text`` column
+    repartition by ``pt`` before the partitioned write (the Iceberg
+    ``write.distribution-mode=hash`` equivalent): without it every mapper
+    writes into every bucket directory and a stage emits M×B files — at
+    10^12 turns that is 10^9+ tiny files, a metadata catastrophe.  The
+    ``text``-carrying turns stage is exempt so the fat column still never
+    rides an exchange: with the north rule's input (an Iceberg table
+    bucketed by conv_id) each input split already holds exactly one
+    bucket, so its mapper-aligned write produces one file per bucket
+    naturally — alignment, not shuffle, is the production answer for the
+    fat stage."""
 
     def __init__(self, spark: SparkSession, workdir: str,
                  n_buckets: int = 32, salt: int = 16,
-                 write_distribution: str = "auto",
                  dictionary: DataFrame | None = None,
                  detect: str = "lexicon",
                  detect_opts: dict | None = None,
                  relations: tuple[str, ...] | None = None):
-        if detect not in ("lexicon", "dictionary"):
-            raise ValueError(f"unknown detect {detect!r} "
-                             "(use 'lexicon' or 'dictionary')")
-        if detect == "dictionary" and dictionary is None:
-            raise ValueError("detect='dictionary' requires a dictionary")
+        check_detect(detect, dictionary)
         self.spark = spark
         self.workdir = workdir
         self.n_buckets = n_buckets
         self.salt = salt
-        self.write_distribution = write_distribution
         # detect='dictionary' routes the mentions stage through the
         # token-n-gram gazetteer join (extract.turn_mentions_bigdict) —
         # detection+linking fuse into one map-side join and the linked
         # view becomes a pure projection of the mentions checkpoint.
         # With detect='lexicon' an explicit dictionary still drives the
         # LINKING stage (the build_graph semantics).  The dictionary's
-        # CONTENT is part of the job's input: run() folds an
-        # order-insensitive content digest into the effective stage
-        # fingerprint, so a resume after a dictionary change recomputes
+        # CONTENT and a non-default detect mode are part of the job's
+        # input: run() folds them into the effective stage fingerprint
+        # (_config), so a resume after a config change recomputes
         # instead of silently serving stale stages.
         self.dictionary = dictionary
         self.detect = detect
@@ -115,6 +112,25 @@ class KGJob:
         ).first()
         return f"{row['n']}:{row['h']}"
 
+    def _config(self) -> dict[str, str]:
+        """The config segments folded into every stage fingerprint.  The
+        default config (no dictionary, no relations, lexicon detect) adds
+        none, so default fingerprints stay byte-identical."""
+        cfg = {}
+        if self.dictionary is not None:
+            cfg["dict"] = self._dictionary_digest()
+        if self.relations:
+            cfg["rels"] = ",".join(self.relations)
+        if self.detect != "lexicon":
+            cfg["detect"] = self.detect
+            if self.detect_opts:
+                cfg["detect"] += ":" + json.dumps(
+                    self.detect_opts, sort_keys=True, separators=(",", ":"))
+        return cfg
+
+    def _effective_fp(self, fp: str) -> str:
+        return "/".join([fp, *(f"{k}={v}" for k, v in self._config().items())])
+
     # -- manifest / lineage ------------------------------------------------
 
     def _manifest_path(self) -> str:
@@ -135,60 +151,48 @@ class KGJob:
         with open(self._manifest_path(), "a") as f:
             f.write(json.dumps(rec, separators=(",", ":")) + "\n")
 
-    def _stage_dir(self, stage: str) -> str:
+    def _path(self, key: str) -> str:
+        """Output directory of manifest key ``stage`` (base run) or
+        ``stage@batch_id`` (``batches/<batch_id>/<stage>``)."""
+        stage, _, bid = key.partition("@")
+        if bid:
+            return os.path.join(self.workdir, "batches", bid, stage)
         return os.path.join(self.workdir, stage)
 
-    def _batch_stage_dir(self, batch_id: str, stage: str) -> str:
-        return os.path.join(self.workdir, "batches", batch_id, stage)
+    def _read_stage(self, key: str, rec: dict) -> DataFrame:
+        """Read a committed stage with the manifest-pinned schema, so a
+        legitimately EMPTY stage (no part files to infer from) reads back
+        as 0 rows instead of throwing."""
+        reader = self.spark.read
+        if rec.get("schema"):
+            reader = reader.schema(
+                StructType.fromJson(json.loads(rec["schema"])))
+        return reader.parquet(self._path(key))
 
     def _read_committed(self, key: str) -> DataFrame:
-        """Read a committed stage (base or ``stage@batch``) with the
-        manifest-pinned schema, so legitimately EMPTY stages (no part
-        files to infer from) read back as 0 rows instead of throwing."""
         rec = self._read_manifest().get(key)
         if not rec or rec.get("status") != "ok":
             raise ValueError(f"stage {key!r} has no committed manifest row")
-        if "@" in key:
-            stage, bid = key.split("@", 1)
-            path = self._batch_stage_dir(bid, stage)
-        else:
-            path = self._stage_dir(key)
-        reader = self.spark.read
-        if rec.get("schema"):
-            from pyspark.sql.types import StructType
-            reader = reader.schema(
-                StructType.fromJson(json.loads(rec["schema"])))
-        return reader.parquet(path)
+        return self._read_stage(key, rec)
 
-    def _run_stage(self, stage: str, input_fingerprint: str,
-                   build, key: str | None = None,
-                   path: str | None = None) -> DataFrame:
-        """Run or resume one stage: skip when the manifest has an ``ok``
-        row with the same input fingerprint; else (re)compute and commit.
-        ``key``/``path`` override the manifest key and output directory
-        (batch appends use ``stage@batch_id`` under batches/<id>/)."""
-        key = key or stage
-        path = path or self._stage_dir(stage)
+    def _run_stage(self, key: str, input_fingerprint: str,
+                   build) -> DataFrame:
+        """Run or resume one stage (manifest key ``stage`` or
+        ``stage@batch_id``): skip when the manifest has an ``ok`` row with
+        the same input fingerprint; else (re)compute and commit."""
+        path = self._path(key)
         prior = self._read_manifest().get(key)
         if (prior and prior.get("status") == "ok"
                 and prior.get("input_fingerprint") == input_fingerprint
                 and os.path.isdir(path)):
             self.metrics[key] = {**prior, "resumed": True}
-            reader = self.spark.read
-            if prior.get("schema"):
-                # manifest-pinned schema: lets a legitimately EMPTY
-                # stage (no part files to infer from) resume cleanly
-                from pyspark.sql.types import StructType
-                reader = reader.schema(
-                    StructType.fromJson(json.loads(prior["schema"])))
-            return reader.parquet(path)
+            return self._read_stage(key, prior)
         t0 = time.time()
         df = build()
         if "conv_id" in df.columns:
             df = df.withColumn(
                 "pt", F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)))
-            if (self.write_distribution == "auto"
-                    and "text" not in df.columns):
+            if "text" not in df.columns:
                 # hash write distribution: one exchange of the slim rows
                 # buys B output files instead of M×B (see class docstring)
                 df = df.repartition(self.n_buckets, "pt")
@@ -208,6 +212,21 @@ class KGJob:
         self.metrics[key] = rec
         return out
 
+    def _union(self, stage: str, bids: list[str], *cols: str) -> DataFrame:
+        """The base run of ``stage`` ∪ its committed batches ``bids``,
+        projected to ``cols`` when given."""
+        df = self._read_committed(stage)
+        for bid in bids:
+            df = df.unionByName(self._read_committed(f"{stage}@{bid}"))
+        return df.select(*cols) if cols else df
+
+    def _prior(self, stage: str, batch_id: str, *cols: str) -> DataFrame:
+        """What the base run and every committed batch OTHER than
+        ``batch_id`` hold of ``stage`` — a retried append must neither
+        collide with nor exclude against its own partial commit."""
+        return self._union(stage, [b for b in self.batch_ids(stage)
+                                   if b != batch_id], *cols)
+
     # -- the pipeline --------------------------------------------------
 
     STAGES = ("turns", "turn_order", "mentions", "linked", "graph",
@@ -221,14 +240,12 @@ class KGJob:
         families never cross conv_id — so on a batch whose conv_ids are
         disjoint from the base, the per-batch outputs are EXACTLY the
         rows a full rebuild would add."""
-        def stage(name, build):
-            if batch_id is None:
-                return self._run_stage(name, fp, build)
-            return self._run_stage(
-                name, fp, build, key=f"{name}@{batch_id}",
-                path=self._batch_stage_dir(batch_id, name))
+        def key(name):
+            return name if batch_id is None else f"{name}@{batch_id}"
 
-        mkey = "mentions" if batch_id is None else f"mentions@{batch_id}"
+        def stage(name, build):
+            return self._run_stage(key(name), fp, build)
+
         # turns: pure projection (turn IRI), NO window — the rank
         # exchange would shuffle + sort full rows including the fat text
         # column, and no downstream link family consumes turn_rank.  The
@@ -238,61 +255,28 @@ class KGJob:
             lambda: T.ordered_turns(transcripts_df, with_rank=False))
         turn_order = stage(
             "turn_order", lambda: T.turn_order(transcripts_df))
+        mentions, linked = link_mentions(stage, turns, self.dictionary,
+                                         self.detect, self.detect_opts)
         if self.detect == "dictionary":
-            # one fused detect+link join; the checkpointed mentions rows
-            # already carry (canonical, entity_iri), so `linked` is a
-            # pure PROJECTION of the mentions checkpoint — writing it as
-            # its own stage would re-shuffle and duplicate the job's
-            # largest output on disk for a constant column
-            mentions = stage(
-                "mentions", lambda: extract.turn_mentions_bigdict(
-                    turns, self.dictionary, **self.detect_opts))
-            linked = mentions.select(
-                "conv_id", "turn_idx", "turn_iri", "surface",
-                F.lit(True).alias("linked"), "canonical", "entity_iri")
-            self.metrics["linked" if batch_id is None
-                         else f"linked@{batch_id}"] = {
+            m = self.metrics[key("mentions")]
+            self.metrics[key("linked")] = {
                 "stage": "linked", "status": "view-of-mentions",
-                "rows": self.metrics[mkey].get("rows"),
-                "resumed": self.metrics[mkey].get("resumed", False)}
-        else:
-            mentions = stage(
-                "mentions", lambda: extract.turn_mentions(turns))
-            link_dict = (self.dictionary if self.dictionary is not None
-                         else linking.canonical_dictionary(self.spark))
-            linked = stage(
-                "linked", lambda: linking.link_entities(
-                    mentions, link_dict,
-                    # mentions come from turn_mentions → the lexicon IS
-                    # the surface universe; zero-Python linking stage
-                    surface_universe=extract.LEXICON))
+                "rows": m.get("rows"), "resumed": m.get("resumed", False)}
         # the one non-conversation-local link family: entity type/label
         # links are per-distinct-entity, so a batch must not re-emit
         # links for entities the base (or an earlier batch) already
         # covered — anti-join against the committed entity set, read
         # from the entity_stats AGGREGATES (bounded by the dictionary,
-        # never the corpus)
-        exclude = (self._committed_entities(batch_id)
-                   if batch_id is not None else None)
-        rels = None
-        if self.relations:
-            def _build_rels():
-                r = extract.relation_links(turns, verbs=self.relations)
-                prior = self._committed_relations(batch_id)
-                if prior is not None:
-                    r = r.join(prior, ["origin", "rel", "target"],
-                               "left_anti")
-                return r
-            rels = stage("relations", _build_rels)
-        def _build_graph():
-            g = (extract.conversation_links(turns)
-                 .unionByName(canonicalize.mention_links(linked))
-                 .unionByName(canonicalize.entity_links(linked,
-                                                        exclude=exclude)))
-            return g.unionByName(rels) if rels is not None else g
-        graph = stage("graph", _build_graph)
-        edges = stage(
-            "edges", lambda: canonicalize.adjacency_edges(graph))
+        # never the corpus); committed relation triples likewise
+        ents = rels = None
+        if batch_id is not None:
+            ents = self._prior("entity_stats", batch_id, "entity_iri")
+            if self.relations:
+                rels = self._prior("relations", batch_id,
+                                   "origin", "rel", "target")
+        graph, edges, relations = link_families(
+            stage, turns, linked, self.relations,
+            exclude_entities=ents, exclude_relations=rels)
         entity_stats = stage(
             "entity_stats", lambda:
             canonicalize.entity_mention_counts(linked, salt=self.salt))
@@ -300,16 +284,9 @@ class KGJob:
                "mentions": mentions, "linked": linked,
                "graph": graph, "edges": edges,
                "entity_stats": entity_stats}
-        if rels is not None:
-            out["relations"] = rels
+        if relations is not None:
+            out["relations"] = relations
         return out
-
-    def _effective_fp(self, fp: str) -> str:
-        if self.dictionary is not None:
-            fp = f"{fp}/dict={self._dictionary_digest()}"
-        if self.relations:
-            fp = f"{fp}/rels={','.join(self.relations)}"
-        return fp
 
     def run(self, transcripts_df: DataFrame,
             input_fingerprint: str = "default") -> dict[str, DataFrame]:
@@ -355,32 +332,12 @@ class KGJob:
                              "safe ([A-Za-z0-9._-]+)")
         if on_existing not in ("error", "skip", "trust"):
             raise ValueError(f"unknown on_existing {on_existing!r}")
-        manifest = self._read_manifest()
-        if manifest.get("turns", {}).get("status") != "ok":
-            raise ValueError("append_batch requires a completed base "
-                             "run (run() first)")
-        # config first: a stage "missing" because the base was built
-        # under a different dictionary/relations config should say so
-        self._check_config_matches_base(manifest)
-        missing = [s for s in self._required_stages()
-                   if manifest.get(s, {}).get("status") != "ok"]
-        if missing:
-            raise ValueError(
-                f"append_batch requires a completed base run; missing "
-                f"stages: {missing} (run() first)")
-        self._check_batches_complete(manifest, exclude=batch_id)
+        self._check_base("append_batch", exclude=batch_id)
         if on_existing != "trust":
-            # scan base + every committed batch (a conversation ingested
-            # by an EARLIER append is just as "existing" as a base one),
-            # but exclude THIS batch_id's own rows so a retry of a
-            # crashed append doesn't collide with its partial commit
-            base_convs = self._read_committed("turn_order").select("conv_id")
-            for bid in self.batch_ids("turn_order"):
-                if bid != batch_id:
-                    base_convs = base_convs.unionByName(
-                        self._read_committed(f"turn_order@{bid}")
-                        .select("conv_id"))
-            base_convs = base_convs.distinct()
+            # a conversation ingested by an EARLIER append is just as
+            # "existing" as a base one
+            base_convs = self._prior("turn_order", batch_id,
+                                     "conv_id").distinct()
             batch_convs = transcripts_df.select("conv_id").distinct()
             # semi from the BASE side so the small batch set broadcasts;
             # the overlap result is bounded by the batch size
@@ -415,13 +372,30 @@ class KGJob:
         return all(manifest.get(s, {}).get("status") == "ok"
                    for s in self._required_stages())
 
-    def _check_batches_complete(self, manifest: dict,
-                                exclude: str | None = None) -> None:
-        """Every committed batch other than ``exclude`` must have ALL its
-        stages — appends and compactions over a half-committed batch
-        would under-exclude entities/relations (retry the crashed batch
-        to completion first; same batch_id + fingerprint resumes)."""
+    def _check_base(self, op: str, exclude: str | None = None) -> None:
+        """Precondition of ``append_batch`` and ``compact_to``: a
+        completed base run built under this job's config, and ALL stages
+        of every committed batch other than ``exclude`` — an append over
+        a half-committed batch would under-exclude entities/relations,
+        and a compaction would copy it per-stage into an INCONSISTENT
+        base (its turns present, its graph absent) with the retry path
+        gone (retry the crashed batch to completion first; same
+        batch_id + fingerprint resumes)."""
+        manifest = self._read_manifest()
+        if manifest.get("turns", {}).get("status") != "ok":
+            raise ValueError(f"{op} requires a completed base run "
+                             "(run() first)")
+        # config first: a stage "missing" because the base was built
+        # under a different dictionary/relations/detect config should
+        # say so
+        self._check_config_matches_base(manifest)
         stages = self._required_stages()
+        missing = [s for s in stages
+                   if manifest.get(s, {}).get("status") != "ok"]
+        if missing:
+            raise ValueError(
+                f"{op} requires a completed base run; missing "
+                f"stages: {missing} (run() first)")
         others = {k.split("@", 1)[1] for k, r in manifest.items()
                   if "@" in k and r.get("status") == "ok"} - {exclude}
         for bid in sorted(others):
@@ -435,11 +409,12 @@ class KGJob:
                     "fingerprint to resume)")
 
     def _check_config_matches_base(self, manifest: dict) -> None:
-        """The base run's fingerprint records the dictionary digest and
-        connector set it was built with; an append (or compaction) under
-        a DIFFERENT config would silently mix configurations in the
-        combined views — run() recomputes on config change, so the
-        incremental paths must refuse instead."""
+        """The base run's fingerprint records the config segments
+        (dictionary digest, connector set, detect mode) it was built
+        with; an append (or compaction) under a DIFFERENT config would
+        silently mix configurations in the combined views — run()
+        recomputes on config change, so the incremental paths must
+        refuse instead."""
         base_fp = manifest.get("turns", {}).get("input_fingerprint", "")
         # r07 (advice fix): compare the FULL value of each config segment
         # for exact equality instead of substring containment — under the
@@ -447,52 +422,20 @@ class KGJob:
         # rels=is,has (comma-prefix), silently mixing connector configs
         # in the combined table() view.  Segments are parsed on '/' (the
         # same separator _effective_fp appends with); a user fingerprint
-        # that itself contains '/dict=' or '/rels=' remains ambiguous and
-        # is documented as reserved.
+        # that itself contains '/dict=', '/rels=' or '/detect=' remains
+        # ambiguous and is documented as reserved.
         base_segs = base_fp.split("/")
-        base_dict = [s[len("dict="):] for s in base_segs
-                     if s.startswith("dict=")]
-        base_rels = [s[len("rels="):] for s in base_segs
-                     if s.startswith("rels=")]
-        want_dict = ([self._dictionary_digest()]
-                     if self.dictionary is not None else [])
-        want_rels = [",".join(self.relations)] if self.relations else []
-        for kind, base_v, want_v in (("dict", base_dict, want_dict),
-                                     ("rels", base_rels, want_rels)):
+        want = self._config()
+        for kind in ("dict", "rels", "detect"):
+            base_v = [s[len(kind) + 1:] for s in base_segs
+                      if s.startswith(kind + "=")]
+            want_v = [want[kind]] if kind in want else []
             if base_v != want_v:
                 raise ValueError(
                     f"this job's config ({kind}={want_v or 'absent'}) "
                     f"does not match the base run's fingerprint "
                     f"{base_fp!r} ({kind}={base_v or 'absent'}); rebuild "
                     "or construct the job with the base config")
-
-    def _committed_relations(self, batch_id: str | None) -> DataFrame | None:
-        """Relation triples already committed by the base run or a batch
-    other than ``batch_id`` (None for a base run — nothing to exclude).
-    Each committed relations stage is a deduped triple set (bounded by
-    the asserted-relation vocabulary, not the corpus)."""
-        if batch_id is None:
-            return None
-        rel = self._read_committed("relations").select(
-            "origin", "rel", "target")
-        for bid in self.batch_ids("relations"):
-            if bid != batch_id:
-                rel = rel.unionByName(
-                    self._read_committed(f"relations@{bid}")
-                    .select("origin", "rel", "target"))
-        return rel
-
-    def _committed_entities(self, batch_id: str) -> DataFrame:
-        """Distinct entity_iri already covered by the base run or a
-        committed batch other than ``batch_id`` (a retry must not
-        exclude against its own partial commit)."""
-        ents = self._read_committed("entity_stats").select("entity_iri")
-        for bid in self.batch_ids("entity_stats"):
-            if bid != batch_id:
-                ents = ents.unionByName(
-                    self._read_committed(f"entity_stats@{bid}")
-                    .select("entity_iri"))
-        return ents.distinct()
 
     def compact_to(self, new_workdir: str,
                    input_fingerprint: str = "compacted") -> "KGJob":
@@ -514,25 +457,12 @@ class KGJob:
                 and os.path.exists(os.path.join(new_workdir, MANIFEST))):
             raise ValueError(f"{new_workdir!r} already holds a job "
                              "(delete the partial/old target first)")
-        manifest = self._read_manifest()
-        if manifest.get("turns", {}).get("status") != "ok":
-            raise ValueError("compact_to requires a completed base run")
-        self._check_config_matches_base(manifest)
-        missing = [s for s in self._required_stages()
-                   if manifest.get(s, {}).get("status") != "ok"]
-        if missing:
-            raise ValueError(f"source base run incomplete: {missing}")
-        # a half-committed batch would compact per-stage into an
-        # INCONSISTENT base (its turns present, its graph absent) with
-        # the retry path gone — refuse until it completes
-        self._check_batches_complete(manifest)
+        self._check_base("compact_to")
         target = KGJob(self.spark, new_workdir, n_buckets=self.n_buckets,
-                       salt=self.salt,
-                       write_distribution=self.write_distribution,
-                       dictionary=self.dictionary, detect=self.detect,
-                       detect_opts=self.detect_opts,
+                       salt=self.salt, dictionary=self.dictionary,
+                       detect=self.detect, detect_opts=self.detect_opts,
                        relations=self.relations)
-        # fold dict/relations into the target's fingerprints (exactly as
+        # fold the config into the target's fingerprints (exactly as
         # run() would) so post-compaction appends pass the config check
         fp = target._effective_fp(input_fingerprint)
         for stage_name in self._required_stages():
@@ -580,16 +510,9 @@ class KGJob:
             else:
                 raise ValueError(f"no committed batch {until!r} for stage "
                                  f"{name!r} (have {bids})")
-        df = self._read_committed(name)
-        for bid in bids:
-            df = df.unionByName(self._read_committed(f"{name}@{bid}"))
+        df = self._union(name, bids)
         if name == "entity_stats":
             df = (df.groupBy("entity_iri", "canonical")
                     .agg(F.sum("n_mentions").alias("n_mentions"),
                          F.sum("n_convs").alias("n_convs")))
         return df
-
-
-def run_kg_job(spark: SparkSession, transcripts_df: DataFrame,
-               workdir: str, **kw) -> dict[str, DataFrame]:
-    return KGJob(spark, workdir, **kw).run(transcripts_df)
